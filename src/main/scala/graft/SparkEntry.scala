@@ -53,6 +53,17 @@ object SparkEntry {
       |  FROM events
       |)""".stripMargin
 
+  /** DuckDB SQL rounding the double `e` to 6 decimals as Spark's
+    * `round(_, 6)` does: half-up on the value's decimal string
+    * (`Double.toString`), not on its binary value. The two disagree only
+    * on a 6-decimal midpoint, which ramp values hit: an indicator ramp
+    * step of 41/640 prints as 0.0640625, Spark rounds that up to
+    * 0.064063, and DuckDB's `round` on the binary value gives 0.064062.
+    * The cast back to DOUBLE keeps the column type of the Spark side.
+    */
+  private def sparkRound6(e: String): String =
+    s"CAST(round(CAST(CAST($e AS VARCHAR) AS DECIMAL(38,18)), 6) AS DOUBLE)"
+
   private val RecordIdxCte =
     """idx AS (
       |  SELECT record, CAST(row_number() OVER (ORDER BY record) - 1 AS BIGINT) AS pos
@@ -266,9 +277,11 @@ object SparkEntry {
   }
 
   /** IVF coarse-quantizer centroids per (sf dir, k, iters), trained once
-    * and cached: FIVE ivf queries (search, recall, index write/append,
-    * stream assign) and the two SemDeDup twins each deterministically
-    * train the SAME quantizer over the same corpus — real usage trains
+    * and cached. FIVE ivf queries (search, recall, index write/append,
+    * stream assign) deterministically train the SAME (IvfK, IvfIters)
+    * quantizer over the same corpus; `dedup_semantic` is the only reader
+    * of its (SemK, SemIters) key (`dedup_text` trains its own quantizer
+    * over derived vectors). Real usage trains
     * it once and FREEZES it in the index artifact (writeIvfIndex's
     * `_graft_centroids.txt` doctrine). The cached value is a metadata-
     * sized driver array (k × dim doubles), dropped with the session
@@ -491,8 +504,8 @@ object SparkEntry {
     s"""WITH $OpsetCte, op2 AS (
        |  SELECT record, t, value, value * value AS v2 FROM opset
        |), ${epsilonCtesFor("op2", "value", "")}, ${epsilonCtesFor("op2", "v2", "v2")}, $i1, $i2
-       |SELECT z1.record, z1.t, round(z1.z, 6) AS "${MultiCodes(0).name}",
-       |       round(z2.z, 6) AS "${MultiCodes(1).name}"
+       |SELECT z1.record, z1.t, ${sparkRound6("z1.z")} AS "${MultiCodes(0).name}",
+       |       ${sparkRound6("z2.z")} AS "${MultiCodes(1).name}"
        |FROM $r1 z1 JOIN $r2 z2 ON z1.record = z2.record AND z1.t = z2.t
        |ORDER BY z1.record, z1.t""".stripMargin
   }
@@ -4874,7 +4887,7 @@ object SparkEntry {
       val (ctes, rel) = SignalOps.indicatorOracleCtes(
         "opset", "value", "record", "t", SgW, SgDeg, 1, IndSigma)
       s"""WITH $OpsetCte, $ctes
-         |SELECT record, t, round(z, 6) AS z FROM $rel ORDER BY record, t""".stripMargin
+         |SELECT record, t, ${sparkRound6("z")} AS z FROM $rel ORDER BY record, t""".stripMargin
     },
 
     "sg_outliers" -> outliersSql,
@@ -4940,10 +4953,10 @@ object SparkEntry {
 
     "instants_features" ->
       s"""WITH $OpsetCte, $bankOracleCtes
-         |SELECT record, t, "LEN", "REV", round("PERCENT", 6) AS "PERCENT", value,
-         |       round("${IndCodes(0).name}", 6) AS "${IndCodes(0).name}",
-         |       round("${IndCodes(1).name}", 6) AS "${IndCodes(1).name}",
-         |       round("${IndCodes(2).name}", 6) AS "${IndCodes(2).name}"
+         |SELECT record, t, "LEN", "REV", ${sparkRound6("\"PERCENT\"")} AS "PERCENT", value,
+         |       ${sparkRound6(s"\"${IndCodes(0).name}\"")} AS "${IndCodes(0).name}",
+         |       ${sparkRound6(s"\"${IndCodes(1).name}\"")} AS "${IndCodes(1).name}",
+         |       ${sparkRound6(s"\"${IndCodes(2).name}\"")} AS "${IndCodes(2).name}"
          |FROM bankq ORDER BY record, t""".stripMargin,
 
     "tube_highlight" ->

@@ -41,7 +41,8 @@ object Fanout {
     // upstream stages under AQE, paying the scan early and possibly
     // twice. Pass such plans through untouched instead of silently
     // double-executing; the caller that needs width above an exchange
-    // should pin it below the exchange (see Opset.fromEvents(wide)).
+    // should set it on the exchange itself (see Opset.fromEvents: its
+    // record exchange takes the width `wide = true` asks for).
     // A cached frame (InMemoryRelation leaf) is safe: its probe plans the
     // cache read without executing the cached subtree.
     import org.apache.spark.sql.catalyst.plans.logical._

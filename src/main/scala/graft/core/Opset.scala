@@ -3,6 +3,7 @@ package graft.core
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
+import org.apache.spark.network.util.JavaUtils
 
 /** Spark-native Opset: the reference's set of named signal DataFrames
   * (tabata opset.py:52, one pandas DataFrame per record in an HDF5 store)
@@ -14,7 +15,11 @@ import org.apache.spark.sql.expressions.Window
   * `partitionBy(record).orderBy(t)` or a `groupBy(record)` aggregation, so
   * records scale out linearly across executors; at 100 TB an Opset is a
   * parquet directory (optionally bucketed by record) and no operator here
-  * shuffles more than once on `record`.
+  * shuffles more than once on `record`. [[Opset.fromEvents]] plans that
+  * one shuffle itself, RANGE-partitioned on `record`: the same exchange
+  * serves the per-record windows and aggregations and a global
+  * `orderBy(record, ...)` of their output (its `wide` variant
+  * hash-partitions instead).
   *
   * Positional indexing (opset.py:135 `__getitem__`, opset.py:164 slices,
   * opset.py:207 `current_record`, opset.py:195 `rewind`) is defined on the
@@ -171,14 +176,16 @@ final case class Opset(df: DataFrame, recordCol: String = "record", tCol: String
   /** Number of records (metadata-sized count). */
   def size: Long = records.count()
 
-  /** Persist the store as parquet, hash-distributed on the record key so
-    * a record's samples are co-located (the HDF5-store analog,
-    * opset.py:52/229's write path). `numFiles <= 0` keeps the current
-    * partitioning; with AQE enabled, `numFiles` is an upper bound — AQE
-    * may coalesce small outputs into fewer files (observed on Spark 4.1
-    * even for user-specified repartition), which preserves record
-    * co-location (whole hash buckets merge) and avoids the small-files
-    * problem at scale.
+  /** Persist the store as parquet with each record's samples co-located
+    * (the HDF5-store analog, opset.py:52/229's write path).
+    * `numFiles > 0` hash-distributes on the record key into at most that
+    * many files: with AQE enabled it is an upper bound — AQE may coalesce
+    * small outputs into fewer files (observed on Spark 4.1 even for
+    * user-specified repartition), which preserves record co-location
+    * (whole hash buckets merge) and avoids the small-files problem at
+    * scale. `numFiles <= 0` keeps the current partitioning; for a
+    * [[Opset.fromEvents]] store that is its record exchange, which
+    * co-locates each record as well.
     */
   def save(path: String, numFiles: Int = 0): Unit = {
     val out = if (numFiles > 0) df.repartition(numFiles, col(recordCol)) else df
@@ -229,27 +236,54 @@ object Opset {
     val base = ev.select(
       col("user_id").cast("string").as("record"),
       col("ts"), col("event_id"), col("event_type"), col("value"))
-    // `wide = true` pins the record exchange's width when the scan is
-    // narrower than the session (a floor, like graft.core.Fanout — a
-    // production-scale scan passes through untouched): this exchange is
+    // The record exchange is planned HERE, range-partitioned on `record`,
+    // and it is the only one: RangePartitioning(record) satisfies both the
+    // per-record windows and `groupBy(record)` (ClusteredDistribution) and
+    // a graded `orderBy(record, ...)` (OrderedDistribution), so the global
+    // sort above a per-record chain plans no second exchange — and no
+    // RangePartitioner sampling job re-running the chain. The range
+    // bounds are sampled over this scan, not over the chain.
+    //
+    // Width: the input's bytes (optimizer statistics, so nothing runs)
+    // over AQE's target bytes per reducer, at least 1 and at most the
+    // session's shuffle width. An explicit count is not coalesced by AQE,
+    // so the layout does not depend on where the sampled bounds fall
+    // (measured on 4 cores: left to AQE, a ~2 MB signal table landed in 1
+    // or 2 partitions, and two concurrent chain tasks cost ~20% peak
+    // memory); an input under one target plans a single-partition
+    // exchange, which samples nothing.
+    //
+    // `wide = true` instead HASH-partitions on `record`, pinning the width
+    // to the session's parallelism when the scan is narrower (a floor,
+    // like graft.core.Fanout — a production-scale scan passes through
+    // untouched and ENSURE_REQUIREMENTS plans the exchange): this exchange is
     // the ONE shuffle a per-record-EXPENSIVE chain (indicator banks, tube
     // estimate/score windows) reuses, because each is keyed on `record`
     // and an explicit repartition above a same-key window is statically
     // satisfied and planned away — the pin must live below the first
-    // window. Left to ENSURE_REQUIREMENTS, AQE's byte-based coalescing
-    // folds the small-on-the-wire signal table to 1-2 partitions and
-    // serializes every O(w²)-per-row window above it (measured:
-    // instants_multi ran wall = run = cpu on local[32]). Deliberately
-    // opt-in: cheap per-row consumers (the opset_*/plot_* class) LOSE
-    // more to 32 pinned tiny tasks of shuffle-file churn than the width
-    // buys (measured +0.3 s on sub-second rows), which is AQE's case.
-    // row_number per record is partitioning-independent either way.
-    val src = {
-      val target = spark.sparkContext.defaultParallelism
-      if (wide && base.rdd.getNumPartitions < target)
-        base.repartition(target, col("record"))
-      else base
-    }
+    // window. Without the pin the O(w²)-per-row windows of a small signal
+    // table run in one or two tasks (measured: instants_multi ran wall =
+    // run = cpu on local[32]). Deliberately opt-in: cheap per-row
+    // consumers (the opset_*/plot_* class) LOSE more to 32 pinned tiny
+    // tasks of shuffle-file churn than the width buys (measured +0.3 s on
+    // sub-second rows). It stays hash-partitioned because the bank built
+    // on it feeds Selector.fit, whose RandomForest bags rows per partition
+    // (seeded by partition index): moving records between partitions
+    // would change the fitted tree. row_number per record is
+    // partitioning-independent either way.
+    val src =
+      if (wide) {
+        val target = spark.sparkContext.defaultParallelism
+        if (base.rdd.getNumPartitions < target) base.repartition(target, col("record"))
+        else base
+      } else {
+        val perReducer = JavaUtils.byteStringAsBytes(
+          spark.conf.get("spark.sql.adaptive.advisoryPartitionSizeInBytes"))
+        val bytes = ev.queryExecution.optimizedPlan.stats.sizeInBytes
+        val width = ((bytes + perReducer - 1) / perReducer)
+          .min(spark.conf.get("spark.sql.shuffle.partitions").toInt).max(1).toInt
+        base.repartitionByRange(width, col("record"))
+      }
     val w = Window.partitionBy("record").orderBy("ts", "event_id")
     Opset(src.select(
       col("record"),

@@ -52,13 +52,14 @@ object SignalOps {
       .rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)
 
     val base = df
-      .withColumn("_sg_rn", row_number().over(wOrd).cast("long"))
-      .withColumn("_sg_n", count(lit(1)).over(wFull))
+      .withColumns(Map(
+        "_sg_rn" -> row_number().over(wOrd).cast("long"),
+        "_sg_n" -> count(lit(1)).over(wFull)))
       .filter(col("_sg_n") >= w)
 
     val (fw, lw) = sgEdgeArrays(col(x), rec, t, col("_sg_rn"), col("_sg_n"), w)
     base
-      .withColumn("_sg_fw", fw).withColumn("_sg_lw", lw)
+      .withColumns(Map("_sg_fw" -> fw, "_sg_lw" -> lw))
       .withColumn(out, sgExpr(col(x), rec, t, col("_sg_rn"), col("_sg_n"), w, deg, deriv,
         col("_sg_fw"), col("_sg_lw")))
       .drop("_sg_rn", "_sg_n", "_sg_fw", "_sg_lw")
@@ -66,12 +67,12 @@ object SignalOps {
 
   /** The edge-sample arrays of one (signal, window) pair: the record's
     * FIRST w samples and its REVERSED last w samples, each as one
-    * full-frame window column. Materialize both ONCE (one `withColumn`
-    * each) and pass the resulting attribute to [[sgExpr]] — window
-    * extraction hoists every syntactic occurrence of a window expression
-    * separately, so inlining these in the per-edge-row CASE branches
-    * would plant w window frames per edge row (440 at w=21) instead
-    * of 2 per (signal, window).
+    * full-frame window column. Materialize both ONCE (one `withColumns`,
+    * so they share one WindowExec) and pass the resulting attributes to
+    * [[sgExpr]] — window extraction hoists every syntactic occurrence of
+    * a window expression separately, so inlining these in the per-edge-row
+    * CASE branches would plant w window frames per edge row (440 at w=21)
+    * instead of 2 per (signal, window).
     *
     * `collect_list` skips nulls: a null sample inside an edge window would
     * silently SHIFT the collected array and yield wrong (not null) SG
@@ -226,34 +227,43 @@ object SignalOps {
   def indicatorDf(df: DataFrame, sg: String, rec: String, t: String,
                   sigma: Column, positive: Boolean, out: String): DataFrame = {
     val wOrd  = Window.partitionBy(rec).orderBy(t)
-    val wFull = Window.partitionBy(rec).orderBy(t)
-      .rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)
+    val wRun  = wOrd.rowsBetween(Window.unboundedPreceding, Window.currentRow)
+    val wFull = wOrd.rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)
     val b  = if (positive) (col(sg) > sigma).cast("int") else (col(sg) < sigma).cast("int")
+    // row rn (1-based) carries the reference's dp[rn − 1] = b[rn] − b[rn − 1]
+    // (0-based b); a crossing row has _dp ≠ 0 and keeps its rn in _cr
     val d1 = df.withColumn("_b", b)
-      .withColumn("_rn", row_number().over(wOrd))
-      .withColumn("_dp", lead(col("_b"), 1).over(wOrd) - col("_b"))
-      .withColumn("_c", when(col("_dp").isNotNull && col("_dp") =!= 0, 1).otherwise(0))
-    val d2 = d1
-      .withColumn("_seg", sum(col("_c")).over(wOrd)) // crossings at idx <= current
-      .withColumn("_ncross", sum(col("_c")).over(wFull))
-      .withColumn("_rnc", min(when(col("_c") === 1, col("_rn"))).over(wFull))
-      .withColumn("_firstdp", max(when(col("_rn") === col("_rnc"), col("_dp"))).over(wFull))
-    // _seg counts crossings with index <= current row, so the row AT a
-    // crossing index already belongs to... careful: reference splits
-    // segments so that sample k (dp[k]!=0) ENDS its segment at k (exclusive
-    // upper bound), i.e. sample k starts the NEXT segment? No: z[i0:i] with
-    // boundaries i in k — sample k is the first of the next segment.
-    // _seg(j) = #\{k <= j\} gives: j=k -> 1 (next segment) as required.
-    val wSeg    = Window.partitionBy(rec, "_seg").orderBy(t)
-    val wSegAll = Window.partitionBy(rec, "_seg")
+      .withColumns(Map(
+        "_rn" -> row_number().over(wOrd),
+        "_n" -> count(lit(1)).over(wFull),
+        "_dp" -> (lead(col("_b"), 1).over(wOrd) - col("_b"))))
+      .withColumn("_cr", when(col("_dp").isNotNull && col("_dp") =!= 0, col("_rn")))
+    // The reference (instants.py:45) splits at every crossing index k, and
+    // sample k is the FIRST of the next segment (z[i0:i] for i in k, then
+    // i0 = i). So, all from the (rec, t) ordering:
+    //   _seg   = #crossings at rows <= current (0 before the first one);
+    //   _start = the latest crossing row at or before the current row
+    //            (the row that opened its segment), 1 for segment 0;
+    //   _end   = the next crossing row strictly after it, n + 1 for the
+    //            last segment;
+    // so the segment holds m = _end − _start rows and the current row is
+    // its p = rn − _start-th (0-based). The first crossing's direction
+    // sets z0; a record without a crossing has no _firstdp and gets 0.
+    val d2 = d1.withColumns(Map(
+      "_seg" -> count(col("_cr")).over(wRun),
+      "_start" -> coalesce(max(col("_cr")).over(wRun), lit(1)),
+      "_end" -> coalesce(lead(col("_cr"), 1, null, ignoreNulls = true).over(wOrd),
+        col("_n") + 1),
+      "_firstdp" -> first(when(col("_cr").isNotNull, col("_dp")), ignoreNulls = true)
+        .over(wFull)))
     val z0 = when(col("_firstdp") === 1, lit(0.0)).otherwise(lit(1.0))
-    val m  = count(lit(1)).over(wSegAll)
-    val p  = row_number().over(wSeg) - 1
+    val m  = col("_end") - col("_start")
+    val p  = col("_rn") - col("_start")
     val ramp = when(m > 1, p.cast("double") / (m - 1).cast("double")).otherwise(lit(0.0))
     d2.withColumn(out,
-        when(col("_ncross") === 0, lit(0.0))
-          .otherwise(z0 + (col("_seg")).cast("double") + ramp))
-      .drop("_b", "_rn", "_dp", "_c", "_seg", "_ncross", "_rnc", "_firstdp")
+        when(col("_firstdp").isNull, lit(0.0))
+          .otherwise(z0 + col("_seg").cast("double") + ramp))
+      .drop("_b", "_rn", "_n", "_dp", "_cr", "_seg", "_start", "_end", "_firstdp")
   }
 
   /** DuckDB CTE chain producing (rec, t, z) for [[indicatorDf]] applied to
@@ -331,16 +341,21 @@ object SignalOps {
 
     /** Direct translation of instants.py:45 for test fixtures. */
     def indicator(y: Array[Double], width: Int, order: Int, sigma: Double,
-                  deg: Int = 2): Array[Double] = {
-      val x = savgol(y, width, deg, order)
+                  deg: Int = 2): Array[Double] =
+      ramp(savgol(y, width, deg, order), sigma)
+
+    /** The crossing ramp of instants.py:45 over an already-smoothed
+      * signal `x` — what [[indicatorDf]] computes from its `sg` column.
+      */
+    def ramp(x: Array[Double], sigma: Double): Array[Double] = {
       val b = x.map(v => if (sigma > 0) v > sigma else v < sigma)
-      val dp = (0 until y.length - 1).map(i => (if (b(i + 1)) 1 else 0) - (if (b(i)) 1 else 0))
+      val dp = (0 until x.length - 1).map(i => (if (b(i + 1)) 1 else 0) - (if (b(i)) 1 else 0))
       val k = dp.zipWithIndex.filter(_._1 != 0).map(_._2)
-      val z = Array.fill(y.length)(0.0)
+      val z = Array.fill(x.length)(0.0)
       if (k.nonEmpty) {
         var z0 = 1.0 - (if (dp(k.head) == 1) 1.0 else 0.0)
         var i0 = 0
-        (k :+ y.length).foreach { i =>
+        (k :+ x.length).foreach { i =>
           val m = i - i0
           (0 until m).foreach { j =>
             z(i0 + j) = if (m > 1) z0 + j.toDouble / (m - 1) else z0

@@ -137,12 +137,13 @@ object Indicators {
     val rn = col(s"${prefix}_rn")
     val n  = col(s"${prefix}_n")
     val base = df
-      .withColumn(s"${prefix}_rn", row_number().over(wOrd).cast("long"))
-      .withColumn(s"${prefix}_n", count(lit(1)).over(wFull))
+      .withColumns(Map(
+        s"${prefix}_rn" -> row_number().over(wOrd).cast("long"),
+        s"${prefix}_n" -> count(lit(1)).over(wFull)))
       .filter(n >= minW)
     combos.zipWithIndex.foldLeft(base) { case (d0, ((x, w, o), i)) =>
       val (fw, lw) = SignalOps.sgEdgeArrays(col(x), rec, t, rn, n, w)
-      d0.withColumn(s"${prefix}_fw_$i", fw).withColumn(s"${prefix}_lw_$i", lw)
+      d0.withColumns(Map(s"${prefix}_fw_$i" -> fw, s"${prefix}_lw_$i" -> lw))
         .withColumn(s"${prefix}_b_$i",
           when(n >= w, SignalOps.sgExpr(col(x), rec, t, rn, n, w, deg, o,
             col(s"${prefix}_fw_$i"), col(s"${prefix}_lw_$i"))))
@@ -209,7 +210,7 @@ object Indicators {
         val w2 = 2 * w + 1
         val b = col(s"${prefix}_b_$i")
         val (fw, lw) = SignalOps.sgEdgeArrays(b, rec, t, rn, n, w2)
-        d0.withColumn(s"${prefix}_fw2_$i", fw).withColumn(s"${prefix}_lw2_$i", lw)
+        d0.withColumns(Map(s"${prefix}_fw2_$i" -> fw, s"${prefix}_lw2_$i" -> lw))
           .withColumn(s"${prefix}_r_$i",
             when(n >= w2,
               b - SignalOps.sgExpr(b, rec, t, rn, n, w2, deg, o,

@@ -294,6 +294,12 @@ object Pipeline {
     * `top_word_frac` is a single division of exact integer counts, so
     * both engines evaluate identical doubles at the threshold — no
     * boundary ambiguity in the keep set.
+    *
+    * Caching: the filtered head (steps 1–3) is persisted through
+    * `scope`, which defaults to the SESSION cache
+    * ([[graft.core.CacheScope.session]]) — it stays cached after the
+    * call returns. Callers that clean many corpora pass their own scope
+    * and release it once the result is consumed.
     */
   def cleanCorpus(docs: DataFrame, bench: DataFrame, idCol: String, textCol: String,
                   lang: String = "en", minQuality: Double = 0.6,

@@ -96,6 +96,23 @@ class PlanAuditSpec extends SparkSpec {
       s"record filter not pushed below the window:\n$p")
   }
 
+  test("per-record chains ride the Opset's one record exchange: one shuffle, no segment sort") {
+    // the record exchange of Opset.fromEvents is range-partitioned, so it
+    // also satisfies the graded orderBy(record, ...) — no second exchange
+    // and no RangePartitioner sampling job re-running the chain; the
+    // indicator ramp is computed over the (record, t) ordering alone
+    for (q <- Seq("sg_indicator", "tube_fit1")) {
+      val p = plan(SparkEntry.queries(q)(spark, dir))
+      val shuffles = collectAll(p) { case s: ShuffleExchangeExec => s }
+      assert(shuffles.size === 1, s"$q must shuffle once, on record:\n$p")
+      val segSorts = collectAll(p) {
+        case s: org.apache.spark.sql.execution.SortExec
+          if s.sortOrder.exists(_.references.exists(_.name == "_seg")) => s
+      }
+      assert(segSorts.isEmpty, s"$q sorts on the indicator segment:\n$p")
+    }
+  }
+
   test("split joins broadcast the metadata-sized instant table") {
     val os = Opset.fromEvents(spark, dir)
     val lr = Splits.argmaxInstants(os, "value")

@@ -61,6 +61,54 @@ class SignalOpsSpec extends SparkSpec {
     assert(collectCol(out, "f", "z").forall(_ == 0.0))
   }
 
+  test("indicatorDf equals the array reference exactly: crossing edge cases, records sharing a partition") {
+    // crafted smoothed signals (the `sg` input itself), so each crossing
+    // lands exactly where the case needs it: a '1' sample is past the
+    // threshold (3 > σ = 2, or −3 < σ = −2), a '0' sample (0.0) is not
+    def sig(bits: String, on: Double): Array[Double] = bits.map(c => if (c == '1') on else 0.0).toArray
+    for (sigma <- Seq(2.0, -2.0)) {
+      val on = if (sigma > 0) 3.0 else -3.0
+      val cases = Seq(
+        "none" -> sig("0000000000", on),
+        "always" -> sig("1111111111", on),
+        "firstPair" -> sig("0111111111", on),
+        "firstPairDown" -> sig("1000000000", on),
+        "lastPair" -> sig("0000000001", on),
+        "backToBack" -> sig("0101010000", on),
+        "allPairs" -> sig("0101010101", on),
+        "mixed" -> sig("1100111000110", on),
+        "single" -> sig("1", on),
+        "pair" -> sig("01", on))
+      val rows = cases.flatMap { case (r, xs) =>
+        xs.zipWithIndex.map { case (v, i) => (r, (i + 1).toLong, v) } }
+      // one partition: every record's window state must reset at its boundary
+      val df = rows.toDF("record", "t", "_sg").repartition(1)
+      val out = SignalOps.indicatorDf(df, "_sg", "record", "t", sigma, "z")
+      cases.foreach { case (r, xs) =>
+        assert(collectCol(out, r, "z").toSeq === SignalOps.local.ramp(xs, sigma).toSeq,
+          s"record $r, sigma $sigma")
+      }
+    }
+  }
+
+  test("sgDf + indicatorDf equal the array reference exactly, a record of exactly w samples included") {
+    val w = 7
+    val recW = Array(0.0, 1.0, 4.0, 9.0, 7.0, 2.0, 0.5)
+    val recs = Seq("a" -> recA, "b" -> recB, "w" -> recW,
+      "z" -> Array.tabulate(25)(i => if (i % 4 < 2) 10.0 * i else -5.0 * i))
+    val df = recs.flatMap { case (r, xs) =>
+      xs.zipWithIndex.map { case (v, i) => (r, (i + 1).toLong, v) } }
+      .toDF("record", "t", "value").repartition(1)
+    val sg = SignalOps.sgDf(df, "value", "record", "t", w, 2, 1, "_sg")
+    for (sigma <- Seq(2.0, -2.0, 0.5)) {
+      val out = SignalOps.indicatorDf(sg, "_sg", "record", "t", sigma, "z")
+      recs.foreach { case (r, xs) =>
+        assert(collectCol(out, r, "z").toSeq === SignalOps.local.indicator(xs, w, 1, sigma).toSeq,
+          s"record $r, sigma $sigma")
+      }
+    }
+  }
+
   test("resample: per-record index buckets with exact count/min/max") {
     import spark.implicits._
     import org.apache.spark.sql.functions._

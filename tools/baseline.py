@@ -10,10 +10,12 @@ represent the reference's actual execution style.
 
 Pass symmetry contract (BASELINE.md): each engine's published number is
 min over 2 sessions x min-of-2 passes = 4 passes. For DuckDB that means
-running THIS script twice (each invocation is one session, time_one
-repeat=2); for graft, running `graft.Bench` twice with
-SPARK_GRAFT_BENCH_RUNS=2. tools/merge_baseline.py folds the four JSON
-outputs into BASELINE.md.
+two sessions of this script or of tools/duck_time.py (each invocation
+is one session, min-of-2 passes per query; both print a JSON object
+with a "duckdb" key); for graft, one `graft.Bench` JSON line, which is
+already min over 2 sessions x min-of-2 passes.
+tools/canonical_baseline.py folds the two DuckDB JSONs and the Bench
+line into BASELINE.md.
 
 Usage: python3 tools/baseline.py <sfdir> <oracle_sql.json> [out.md]
 """
