@@ -19,7 +19,9 @@ import org.apache.spark.network.util.JavaUtils
   * one shuffle itself, RANGE-partitioned on `record`: the same exchange
   * serves the per-record windows and aggregations and a global
   * `orderBy(record, ...)` of their output (its `wide` variant
-  * hash-partitions instead).
+  * hash-partitions instead). Reads that need no record order — [[get]]
+  * and the record listing behind [[records]] — use its `adHoc` view, the
+  * same rows with the exchange left to the planner.
   *
   * Positional indexing (opset.py:135 `__getitem__`, opset.py:164 slices,
   * opset.py:207 `current_record`, opset.py:195 `rewind`) is defined on the
@@ -29,7 +31,17 @@ import org.apache.spark.network.util.JavaUtils
   * single-partition window.
   */
 final case class Opset(df: DataFrame, recordCol: String = "record", tCol: String = "t",
-                       sortKey: Option[org.apache.spark.sql.Column => org.apache.spark.sql.Column] = None) {
+                       sortKey: Option[org.apache.spark.sql.Column => org.apache.spark.sql.Column] = None,
+                       adHoc: Option[(DataFrame, DataFrame)] = None) {
+
+  // `adHoc`: (the `df` it mirrors, the same rows without the record
+  // exchange that frame's builder planned; see Opset.fromEvents). Reads
+  // that need no record order use the second: the planner then adds its
+  // own shuffle, pushes a record filter or a partial aggregate below it,
+  // and AQE sizes it from the bytes that actually flow. It holds only
+  // while `df` is the frame it mirrors, so any `copy(df = ...)` drops it.
+  private def plain: DataFrame =
+    adHoc.collect { case (of, view) if of eq df => view }.getOrElse(df)
 
   /** Positional order with a custom key (opset.py:74 `sortkey`): records
     * sort by `key(record)` with the name itself as tie-break (the
@@ -44,7 +56,7 @@ final case class Opset(df: DataFrame, recordCol: String = "record", tCol: String
       .getOrElse(Seq(col(recordCol)))
 
   /** Distinct record names, sorted — the reference's `self.records` list. */
-  def records: DataFrame = df.select(recordCol).distinct().orderBy(recordOrder: _*)
+  def records: DataFrame = plain.select(recordCol).distinct().orderBy(recordOrder: _*)
 
   /** (record, pos) with pos 0-based in sorted-name order — the positional
     * index backing get/slice/rewind. Reference: opset.py:135.
@@ -91,7 +103,7 @@ final case class Opset(df: DataFrame, recordCol: String = "record", tCol: String
   }
 
   /** One record's signal (opset.py:135 `__getitem__` by name). */
-  def get(name: String): DataFrame = df.filter(col(recordCol) === name)
+  def get(name: String): DataFrame = plain.filter(col(recordCol) === name)
 
   /** Records with position in `[from, until)` (opset.py:164 slicing). */
   def slice(from: Int, until: Int): Opset = {
@@ -244,14 +256,23 @@ object Opset {
     // RangePartitioner sampling job re-running the chain. The range
     // bounds are sampled over this scan, not over the chain.
     //
-    // Width: the input's bytes (optimizer statistics, so nothing runs)
-    // over AQE's target bytes per reducer, at least 1 and at most the
-    // session's shuffle width. An explicit count is not coalesced by AQE,
-    // so the layout does not depend on where the sampled bounds fall
-    // (measured on 4 cores: left to AQE, a ~2 MB signal table landed in 1
-    // or 2 partitions, and two concurrent chain tasks cost ~20% peak
-    // memory); an input under one target plans a single-partition
-    // exchange, which samples nothing.
+    // Width: the one AQE's coalescing would pick, computed from the
+    // optimizer's size estimate of the scan (so nothing runs): the bytes
+    // over a per-reducer target of bytes / parallelism, capped at the
+    // advisory partition size and floored at the minimum partition size,
+    // clamped to [1, spark.sql.shuffle.partitions]. An explicit count is
+    // not coalesced again, so the layout does not depend on where the
+    // sampled bounds fall; an input under one minimum partition plans a
+    // single-partition exchange, which samples nothing. The estimate
+    // counts every column of the store, where AQE counts the shuffled
+    // bytes of the columns a query keeps, so near a boundary this can be
+    // one partition wider (a 1.9 MB signal table on 4 cores: 2 here, 1
+    // from AQE).
+    //
+    // Point reads and the record listing skip this exchange (`adHoc`):
+    // they need no record order, and a range exchange would sample the
+    // scan once more and, for a listing, shuffle every row instead of a
+    // partial aggregate.
     //
     // `wide = true` instead HASH-partitions on `record`, pinning the width
     // to the session's parallelism when the scan is narrower (a floor,
@@ -271,24 +292,27 @@ object Opset {
     // (seeded by partition index): moving records between partitions
     // would change the fitted tree. row_number per record is
     // partitioning-independent either way.
-    val src =
-      if (wide) {
-        val target = spark.sparkContext.defaultParallelism
-        if (base.rdd.getNumPartitions < target) base.repartition(target, col("record"))
-        else base
-      } else {
-        val perReducer = JavaUtils.byteStringAsBytes(
-          spark.conf.get("spark.sql.adaptive.advisoryPartitionSizeInBytes"))
-        val bytes = ev.queryExecution.optimizedPlan.stats.sizeInBytes
-        val width = ((bytes + perReducer - 1) / perReducer)
-          .min(spark.conf.get("spark.sql.shuffle.partitions").toInt).max(1).toInt
-        base.repartitionByRange(width, col("record"))
-      }
     val w = Window.partitionBy("record").orderBy("ts", "event_id")
-    Opset(src.select(
+    def indexed(src: DataFrame) = src.select(
       col("record"),
       row_number().over(w).cast("long").as("t"),
       col("event_type"),
-      col("value")))
+      col("value"))
+    if (wide) {
+      val target = spark.sparkContext.defaultParallelism
+      Opset(indexed(
+        if (base.rdd.getNumPartitions < target) base.repartition(target, col("record"))
+        else base))
+    } else {
+      def bytesConf(k: String) = BigInt(JavaUtils.byteStringAsBytes(spark.conf.get(k)))
+      val bytes = base.queryExecution.optimizedPlan.stats.sizeInBytes
+      val perReducer = (bytes / spark.sparkContext.defaultParallelism)
+        .min(bytesConf("spark.sql.adaptive.advisoryPartitionSizeInBytes"))
+        .max(bytesConf("spark.sql.adaptive.coalescePartitions.minPartitionSize"))
+      val width = ((bytes + perReducer - 1) / perReducer)
+        .min(spark.conf.get("spark.sql.shuffle.partitions").toInt).max(1).toInt
+      val df = indexed(base.repartitionByRange(width, col("record")))
+      Opset(df, adHoc = Some((df, indexed(base))))
+    }
   }
 }

@@ -96,13 +96,27 @@ class PlanAuditSpec extends SparkSpec {
       s"record filter not pushed below the window:\n$p")
   }
 
+  test("the record listing aggregates before every shuffle (skips the Opset's record exchange)") {
+    val p = plan(Opset.fromEvents(spark, dir).records)
+    val shuffles = collectAll(p) { case s: ShuffleExchangeExec => s }
+    assert(shuffles.nonEmpty)
+    shuffles.foreach { s =>
+      assert(collectAll(s.child) {
+        case a: org.apache.spark.sql.execution.aggregate.HashAggregateExec => a
+      }.nonEmpty, s"a shuffle below the distinct carries every row:\n$p")
+    }
+  }
+
   test("per-record chains ride the Opset's one record exchange: one shuffle, no segment sort") {
     // the record exchange of Opset.fromEvents is range-partitioned, so it
     // also satisfies the graded orderBy(record, ...) — no second exchange
     // and no RangePartitioner sampling job re-running the chain; the
-    // indicator ramp is computed over the (record, t) ordering alone
-    for (q <- Seq("sg_indicator", "tube_fit1")) {
-      val p = plan(SparkEntry.queries(q)(spark, dir))
+    // indicator ramp is computed over the (record, t) ordering alone.
+    // sf0.001 plans a one-partition exchange, which satisfies any
+    // ordering; small target sizes widen it so that only the range layout
+    // can make the global sort exchange-free.
+    def recordExchange(q: String, df: DataFrame): ShuffleExchangeExec = {
+      val p = plan(df)
       val shuffles = collectAll(p) { case s: ShuffleExchangeExec => s }
       assert(shuffles.size === 1, s"$q must shuffle once, on record:\n$p")
       val segSorts = collectAll(p) {
@@ -110,6 +124,21 @@ class PlanAuditSpec extends SparkSpec {
           if s.sortOrder.exists(_.references.exists(_.name == "_seg")) => s
       }
       assert(segSorts.isEmpty, s"$q sorts on the indicator segment:\n$p")
+      shuffles.head
+    }
+    for (q <- Seq("sg_indicator", "tube_fit1")) {
+      val narrow = SparkEntry.queries(q)(spark, dir)
+      assert(recordExchange(q, narrow).numPartitions === 1, q)
+      withSQLConf("spark.sql.adaptive.advisoryPartitionSizeInBytes" -> "1k",
+          "spark.sql.adaptive.coalescePartitions.minPartitionSize" -> "1k") {
+        val wide = SparkEntry.queries(q)(spark, dir)
+        recordExchange(q, wide).outputPartitioning match {
+          case r: org.apache.spark.sql.catalyst.plans.physical.RangePartitioning =>
+            assert(r.numPartitions > 1, s"$q: record exchange not widened")
+          case other => fail(s"$q: record exchange is $other, not range-partitioned")
+        }
+        assert(wide.collect().toSeq === narrow.collect().toSeq, s"$q rows depend on the exchange width")
+      }
     }
   }
 

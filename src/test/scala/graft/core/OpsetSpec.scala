@@ -70,6 +70,16 @@ class OpsetSpec extends SparkSpec {
     assert(os.size > 0)
   }
 
+  test("get and records of an events store read its rows; of a derived store, the derived rows") {
+    val full = Opset.sampleData(spark)
+    val name = full.records.as[String].first()
+    assert(full.get(name).collect().toSet === full.df.filter($"record" === name).collect().toSet)
+    val derived = full.copy(df = full.df.filter($"record" =!= name && $"t" <= 2))
+    assert(derived.get(name).count() === 0)
+    assert(derived.records.as[String].collect().toSeq ===
+      derived.df.select("record").distinct().orderBy("record").as[String].collect().toSeq)
+  }
+
   test("clean empties the store keeping the schema") {
     val c = os.clean
     assert(c.df.count() === 0)

@@ -44,14 +44,23 @@ class SignalOpsSpec extends SparkSpec {
   }
 
   test("indicatorDf matches the array reference (hump counting)") {
-    val out0 = SignalOps.sgDf(longDf, "value", "record", "t", 7, 2, 1, "_sg")
-    val out = SignalOps.indicatorDf(out0, "_sg", "record", "t", 2.0, "z")
-    val expA = SignalOps.local.indicator(recA, 7, 1, 2.0)
-    val expB = SignalOps.local.indicator(recB, 7, 1, 2.0)
-    collectCol(out, "a", "z").zip(expA).foreach { case (g, e) =>
-      assert(math.abs(g - e) < 1e-9, "record a") }
-    collectCol(out, "b", "z").zip(expB).foreach { case (g, e) =>
-      assert(math.abs(g - e) < 1e-9, "record b") }
+    // exact equality, every record in one partition, a record of exactly
+    // w samples, and thresholds of both signs
+    val w = 7
+    val recs = Seq("a" -> recA, "b" -> recB,
+      "w" -> Array(0.0, 1.0, 4.0, 9.0, 7.0, 2.0, 0.5),
+      "z" -> Array.tabulate(25)(i => if (i % 4 < 2) 10.0 * i else -5.0 * i))
+    val df = recs.flatMap { case (r, xs) =>
+      xs.zipWithIndex.map { case (v, i) => (r, (i + 1).toLong, v) } }
+      .toDF("record", "t", "value").repartition(1)
+    val sg = SignalOps.sgDf(df, "value", "record", "t", w, 2, 1, "_sg")
+    for (sigma <- Seq(2.0, -2.0, 0.5)) {
+      val out = SignalOps.indicatorDf(sg, "_sg", "record", "t", sigma, "z")
+      recs.foreach { case (r, xs) =>
+        assert(collectCol(out, r, "z").toSeq === SignalOps.local.indicator(xs, w, 1, sigma).toSeq,
+          s"record $r, sigma $sigma")
+      }
+    }
   }
 
   test("indicator with no crossings is all zero") {
@@ -86,24 +95,6 @@ class SignalOpsSpec extends SparkSpec {
       val out = SignalOps.indicatorDf(df, "_sg", "record", "t", sigma, "z")
       cases.foreach { case (r, xs) =>
         assert(collectCol(out, r, "z").toSeq === SignalOps.local.ramp(xs, sigma).toSeq,
-          s"record $r, sigma $sigma")
-      }
-    }
-  }
-
-  test("sgDf + indicatorDf equal the array reference exactly, a record of exactly w samples included") {
-    val w = 7
-    val recW = Array(0.0, 1.0, 4.0, 9.0, 7.0, 2.0, 0.5)
-    val recs = Seq("a" -> recA, "b" -> recB, "w" -> recW,
-      "z" -> Array.tabulate(25)(i => if (i % 4 < 2) 10.0 * i else -5.0 * i))
-    val df = recs.flatMap { case (r, xs) =>
-      xs.zipWithIndex.map { case (v, i) => (r, (i + 1).toLong, v) } }
-      .toDF("record", "t", "value").repartition(1)
-    val sg = SignalOps.sgDf(df, "value", "record", "t", w, 2, 1, "_sg")
-    for (sigma <- Seq(2.0, -2.0, 0.5)) {
-      val out = SignalOps.indicatorDf(sg, "_sg", "record", "t", sigma, "z")
-      recs.foreach { case (r, xs) =>
-        assert(collectCol(out, r, "z").toSeq === SignalOps.local.indicator(xs, w, 1, sigma).toSeq,
           s"record $r, sigma $sigma")
       }
     }
